@@ -34,11 +34,16 @@ def merge_annotations(annotations: List[Annotation], text: str) -> List[Annotati
     for a in annotations:
         groups.setdefault((a.name, a.value), []).append(a)
 
-    # whitespace runs act as glue between same-(name,value) spans
-    spaces = [(m.start(), m.end()) for m in _SPACES.finditer(text)]
-
+    # whitespace runs act as glue between same-(name,value) spans; only a
+    # mergeable group of two or more needs them
+    spaces = None
     merged: List[Annotation] = []
     for group in groups.values():
+        if len(group) <= 1 or not group[0].is_mergeable:
+            merged.extend(group)
+            continue
+        if spaces is None:
+            spaces = [(m.start(), m.end()) for m in _SPACES.finditer(text)]
         merged.extend(_merge_one_group(group, spaces))
 
     return _filter_contradicting(merged, text)
@@ -47,14 +52,12 @@ def merge_annotations(annotations: List[Annotation], text: str) -> List[Annotati
 def _merge_one_group(
     annotations: List[Annotation], spaces: List[Tuple[int, int]]
 ) -> List[Annotation]:
-    """Merge one (name, value) group; spans may be glued by whitespace runs.
+    """Merge one mergeable (name, value) group of two or more; spans may be
+    glued by whitespace runs.
 
     Mirrors annotation_merger.py:86-108 including the stable sort of
     annotations-then-spaces by start.
     """
-    if len(annotations) <= 1 or not annotations[0].is_mergeable:
-        return annotations
-
     # events: (start, end, annotation or None-for-space); stable sort by start
     events: List[Tuple[int, int, object]] = [(a.start, a.end, a) for a in annotations]
     events += [(s, e, None) for (s, e) in spaces]

@@ -124,11 +124,14 @@ def _build_run_lut(decode: Dict[Tuple[int, int], int]) -> List[Optional[Tuple[in
     """14-bit window -> (run, code length) for the unique prefix match
     (the T.4 tables are prefix-free per color, so the windows a code
     covers never overlap another's); None = no code matches. Replaces
-    the per-length probe loop in _read_run with one list index."""
+    the per-length probe loop in _read_run with one list index. A table
+    that is not prefix-free fails here, at import, instead of silently
+    decoding the later code."""
     lut: List[Optional[Tuple[int, int]]] = [None] * (1 << 14)
     for (n, v), run in decode.items():
         lo = v << (14 - n)
         for w in range(lo, lo + (1 << (14 - n))):
+            assert lut[w] is None, f"code {v:0{n}b} (run {run}) overlaps run {lut[w][0]}"
             lut[w] = (run, n)
     return lut
 

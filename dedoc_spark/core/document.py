@@ -22,6 +22,10 @@ from dedoc_spark.core.tree import construct_tree, flatten_tree, tree_to_text
 from dedoc_spark.core.txt_extract import extract_txt_lines
 
 _HTML_EXTRACTOR = HtmlExtractor()
+# json.dumps(obj, ensure_ascii=False) builds a new encoder per call; one
+# shared encoder writes the same text. No circular check: the output dicts
+# are built fresh from the document model and cannot contain cycles.
+_to_json = json.JSONEncoder(ensure_ascii=False, check_circular=False).encode
 
 
 def url_hash(url: str) -> str:
@@ -104,10 +108,10 @@ def _finalize(url: str, lines: List[Line], tables, warnings, params: Optional[Di
         "text_linear": text_linear,
         "n_lines": len(lines),
         "n_tables": len(tables),
-        "lines_json": json.dumps([ln.to_dict() for ln in lines], ensure_ascii=False),
-        "tree_json": json.dumps(tree.to_dict(), ensure_ascii=False),
-        "nodes_json": json.dumps(flatten_tree(tree), ensure_ascii=False),
-        "tables_json": json.dumps([t.to_dict() for t in tables], ensure_ascii=False),
+        "lines_json": _to_json([ln.to_dict() for ln in lines]),
+        "tree_json": _to_json(tree.to_dict()),
+        "nodes_json": _to_json(flatten_tree(tree)),
+        "tables_json": _to_json([t.to_dict() for t in tables]),
         "warnings": list(warnings),
         "error": None,
     }

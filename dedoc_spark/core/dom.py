@@ -1,4 +1,4 @@
-"""Minimal HTML DOM on stdlib html.parser.
+"""Minimal HTML DOM on a stdlib html.parser tokenizer.
 
 The reference parses HTML with BeautifulSoup's "html.parser" builder
 (html_reader.py:35). This module rebuilds just the tree behaviors the
@@ -15,6 +15,23 @@ extraction semantics depend on, without any third-party dependency:
   - no implied <html>/<body> insertion and no implied end tags for
     <li>/<p> (html.parser builder does none of that — unlike lxml).
 
+Tokenizer: ``_TreeParser`` is an ``html.parser.HTMLParser`` with its
+scan loop (``goahead``) rewritten to build the tree as it goes:
+
+  - text runs (script/style bodies included), and outside script/style
+    attribute-less start tags (``<name>``) and plain end tags
+    (``</name>``), are handled in the loop itself, with no handler call;
+  - everything rarer — start tags with attributes or ``/>``, comments,
+    ``<!doctype>``, ``<?pi>``, ``<![...]>``, bogus end tags, the end tag
+    of a script/style body, stray ``<``, constructs cut off at end of
+    input — goes to the stdlib ``parse_*`` methods, whose handler
+    callbacks build the nodes;
+  - the text-chunk boundaries, and so the Text nodes, are the stdlib's;
+  - no line/offset tracking (``updatepos``/``getpos``): nothing reads it.
+
+The DOM equals the one the stock ``HTMLParser`` callbacks build on any
+input (tests/test_dom_tokenizer.py).
+
 Also provides deterministic byte→str decoding (BOM, <meta charset>,
 utf-8 with cp1251 fallback) replacing bs4's UnicodeDammit.
 """
@@ -22,6 +39,7 @@ utf-8 with cp1251 fallback) replacing bs4's UnicodeDammit.
 from __future__ import annotations
 
 import re
+from html import unescape
 from html.parser import HTMLParser
 from typing import Iterator, List, Optional, Union
 
@@ -39,7 +57,7 @@ VOID_TAGS = frozenset(
 class Text(str):
     """Plain text node (analogue of bs4 NavigableString)."""
 
-    __slots__ = ("parent",)
+    __slots__ = ()
     name: Optional[str] = None
 
 
@@ -55,20 +73,20 @@ Node = Union["Element", Text]
 
 
 class Element:
-    """Element node with ordered children and an attrs dict."""
+    """Element node with ordered children and an attrs dict. No parent
+    link: nothing walks up the tree, and without one a finished DOM is
+    freed by reference counting instead of waiting for the cycle
+    collector."""
 
-    __slots__ = ("name", "attrs", "children", "parent", "hidden")
+    __slots__ = ("name", "attrs", "children", "hidden")
 
     def __init__(self, name: str, attrs: Optional[dict] = None) -> None:
         self.name = name
         self.attrs = {} if attrs is None else attrs
         self.children: List[Node] = []
-        self.parent: Optional["Element"] = None
         self.hidden = False  # set on cloned merged-table cells
 
     def append(self, node: Node) -> None:
-        if isinstance(node, Element):
-            node.parent = self
         self.children.append(node)
 
     def get(self, key: str, default=None):
@@ -82,28 +100,31 @@ class Element:
 
     # --- traversal -------------------------------------------------------
 
-    def descendants(self) -> Iterator[Node]:
-        """Pre-order document-order traversal of all descendants."""
-        stack: List[Node] = list(reversed(self.children))
-        while stack:
-            node = stack.pop()
-            yield node
-            if isinstance(node, Element):
-                stack.extend(reversed(node.children))
-
     def find_all(self, names) -> List["Element"]:
         """All descendant elements whose name is in ``names`` (document order)."""
         if isinstance(names, str):
             names = (names,)
         names = set(names)
-        return [n for n in self.descendants() if isinstance(n, Element) and n.name in names]
+        found: List[Element] = []
+        stack: List[Node] = self.children[::-1]
+        while stack:
+            node = stack.pop()
+            if isinstance(node, Element):
+                if node.name in names:
+                    found.append(node)
+                stack.extend(node.children[::-1])
+        return found
 
     def get_text(self) -> str:
         """Concatenation of all descendant text (comments/doctypes excluded),
         like bs4 Tag.get_text with default string types."""
         parts: List[str] = []
-        for node in self.descendants():
-            if isinstance(node, Text) and not isinstance(node, (Comment, Doctype)):
+        stack: List[Node] = self.children[::-1]
+        while stack:
+            node = stack.pop()
+            if isinstance(node, Element):
+                stack.extend(node.children[::-1])
+            elif not isinstance(node, (Comment, Doctype)):
                 parts.append(str(node))
         return "".join(parts)
 
@@ -131,14 +152,112 @@ class Element:
         return copy
 
 
+_STARTTAG_OPEN = re.compile(r"<[a-zA-Z]")  # html.parser.starttagopen
+# The tags the loop builds itself: html.parser reads "<name>" as
+# handle_starttag(name.lower(), []) and "</name>" as
+# handle_endtag(name.lower()) (its tagfind and endtagfind expressions).
+_PLAIN_TAG = re.compile(r"<([a-zA-Z][^\t\n\r\f />\x00]*)>|</([a-zA-Z][-.a-zA-Z0-9:_]*)>")
+_RAW_TEXT_TAGS = frozenset(HTMLParser.CDATA_CONTENT_ELEMENTS)
+
+
 class _TreeParser(HTMLParser):
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
         self.root = Element("[document]")
         self.stack: List[Element] = [self.root]
 
-    # html.parser reports attrs as (name, value|None) pairs; bs4 maps
-    # valueless attrs to "" and keeps the last duplicate.
+    def goahead(self, end) -> None:
+        """HTMLParser.goahead (convert_charrefs=True) building the tree.
+        With convert_charrefs on, every stop of the scan is a ``<``, so
+        the stdlib's ``&`` branches are unreachable and left out."""
+        rawdata = self.rawdata
+        n = len(rawdata)
+        stack = self.stack
+        startswith = rawdata.startswith
+        i = 0
+        while i < n:
+            if self.cdata_elem is None:
+                j = rawdata.find("<", i)
+                if j < 0:
+                    # the stdlib holds back a tail ending in what may be a
+                    # cut charref until close(); parse_html feeds the whole
+                    # input at once, so the tail is one chunk either way
+                    j = n
+                if i < j:
+                    data = rawdata[i:j]
+                    if "&" in data:
+                        data = unescape(data)
+                    if data:
+                        stack[-1].children.append(Text(data))
+                i = j
+                if i == n:
+                    break
+                m = _PLAIN_TAG.match(rawdata, i)
+                if m is not None:
+                    i = m.end()
+                    tag = m.group(1)
+                    if tag is None:
+                        # handle_endtag, inline
+                        tag = m.group(2).lower()
+                        for depth in range(len(stack) - 1, 0, -1):
+                            if stack[depth].name == tag:
+                                del stack[depth:]
+                                break
+                        continue
+                    tag = tag.lower()
+                    el = Element(tag, {})
+                    stack[-1].children.append(el)
+                    if tag not in VOID_TAGS:
+                        stack.append(el)
+                    if tag in _RAW_TEXT_TAGS:
+                        self.set_cdata_mode(tag)
+                    continue
+            else:
+                match = self.interesting.search(rawdata, i)
+                if match is None:
+                    break
+                j = match.start()
+                if i < j:
+                    stack[-1].children.append(Text(rawdata[i:j]))
+                i = j
+            if _STARTTAG_OPEN.match(rawdata, i):
+                k = self.parse_starttag(i)
+            elif startswith("</", i):
+                k = self.parse_endtag(i)
+            elif startswith("<!--", i):
+                k = self.parse_comment(i)
+            elif startswith("<?", i):
+                k = self.parse_pi(i)
+            elif startswith("<!", i):
+                k = self.parse_html_declaration(i)
+            elif (i + 1) < n:
+                self.handle_data("<")
+                k = i + 1
+            else:
+                break
+            if k < 0:
+                if not end:
+                    break
+                k = rawdata.find(">", i + 1)
+                if k < 0:
+                    k = rawdata.find("<", i + 1)
+                    if k < 0:
+                        k = i + 1
+                else:
+                    k += 1
+                if self.cdata_elem is None:
+                    self.handle_data(unescape(rawdata[i:k]))
+                else:
+                    self.handle_data(rawdata[i:k])
+            i = k
+        if end and i < n and self.cdata_elem is None:
+            self.handle_data(unescape(rawdata[i:n]))
+            i = n
+        self.rawdata = rawdata[i:]
+
+    # Callbacks of the stdlib parse_* methods. html.parser reports attrs
+    # as (name, value|None) pairs; bs4 maps valueless attrs to "" and
+    # keeps the last duplicate.
     @staticmethod
     def _attrs(pairs) -> dict:
         return {k: ("" if v is None else v) for k, v in pairs}

@@ -71,6 +71,9 @@ def _grid_bounds(n: int) -> Tuple[np.ndarray, np.ndarray]:
 
 
 _grid_outer_cache: Dict[Tuple[int, int], np.ndarray] = {}
+# (h, w) crop shapes are unbounded over a long-lived worker; the cache
+# starts over when full (entries are pure functions of the key)
+_GRID_OUTER_CACHE_MAX = 2048
 
 
 def grid_features(crop: np.ndarray) -> np.ndarray:
@@ -84,6 +87,8 @@ def grid_features(crop: np.ndarray) -> np.ndarray:
     )
     counts = _grid_outer_cache.get((h, w))
     if counts is None:
+        if len(_grid_outer_cache) >= _GRID_OUTER_CACHE_MAX:
+            _grid_outer_cache.clear()
         counts = _grid_outer_cache[(h, w)] = np.outer(rcounts, ccounts)
     return (summed / counts).reshape(-1)
 

@@ -85,15 +85,16 @@ def _md5(s: str) -> str:
 # --- inline annotation parser (html_tag_annotation_parser.py:21-128) ------
 
 
-def _parse_annotations(tag: Node, start: int = 0) -> Tuple[int, List[Annotation]]:
-    if isinstance(tag, str):
-        return len(tag), []
+def _parse_annotations(tag: Element, start: int = 0) -> Tuple[int, List[Annotation]]:
     if tag.name not in TEXT_TAGS:
         return 0, []
 
     annotations: List[Annotation] = []
     curr_len = 0
-    for sub in tag:
+    for sub in tag.children:
+        if isinstance(sub, str):
+            curr_len += len(sub)
+            continue
         part_len, part_ann = _parse_annotations(sub, start + curr_len)
         annotations.extend(part_ann)
         curr_len += part_len
@@ -213,9 +214,10 @@ class HtmlExtractor:
         table: bool = False,
         uid: str = "",
     ) -> List[Line]:
+        # block is the root, a block tag or a table cell: never a script,
+        # style, comment or doctype, so the reference's content-tag check
+        # always passes here
         tag_uid = _md5(url_hash + uid + str(block.name))
-        if not self._is_content_tag(block, handle_invisible_table):
-            return []
         lines: List[Line] = []
         for tag in block:
             lines.extend(
@@ -234,34 +236,36 @@ class HtmlExtractor:
         table: bool = False,
         uid: str = "",
     ) -> List[Line]:
-        tag_uid = _md5(uid + str(tag.name))
-        if not self._is_content_tag(tag, handle_invisible_table):
-            block_lines: List[Line] = []
-        elif isinstance(tag, Element) and tag.name == "table" and not self._visible_table(
-            tag, handle_invisible_table
-        ):
-            block_lines = self._handle_invisible_table(tag, url_hash, tag_uid)
-        elif isinstance(tag, str):
-            block_lines = self._handle_text_line(tag, url_hash, tag_uid)
-        elif tag.name not in AVAILABLE_TAGS:
-            block_lines = []
-        elif tag.name in SPECIAL_SYMBOL_TAGS:
+        name = tag.name  # None for a text node
+        # the tag uid md5(uid + str(name)) is hashed only on the branches
+        # that can yield lines
+        if isinstance(tag, str):
+            # comments, doctypes and whitespace-only text yield no line
+            if isinstance(tag, (Doctype, Comment)) or not tag.strip():
+                return []
+            block_lines = self._handle_text_line(tag, url_hash, _md5(uid + str(name)))
+        elif name in SERVICE_TAGS:
+            return []
+        elif name == "table" and not self._visible_table(tag, handle_invisible_table):
+            block_lines = self._handle_invisible_table(tag, url_hash, _md5(uid + name))
+        elif name not in AVAILABLE_TAGS:
+            return []
+        elif name in SPECIAL_SYMBOL_TAGS:
             block_lines = self._handle_text_line(
-                SPECIAL_SYMBOL_TAGS[tag.name], url_hash, tag_uid, ignore_space=False
+                SPECIAL_SYMBOL_TAGS[name], url_hash, _md5(uid + name), ignore_space=False
             )
-        elif tag.name in BLOCK_TAGS:
+        elif name in BLOCK_TAGS:
             # NOTE: the reference does not forward handle_invisible_table /
             # table into nested blocks (html_reader.py:70) — kept as-is.
-            block_lines = self._read_blocks(tag, url_hash, uid=tag_uid)
-        elif tag.name in LIST_TAGS:
-            block_lines = self._read_list(tag, tag_uid, url_hash, handle_invisible_table)
+            block_lines = self._read_blocks(tag, url_hash, uid=_md5(uid + name))
+        elif name in LIST_TAGS:
+            block_lines = self._read_list(tag, _md5(uid + name), url_hash, handle_invisible_table)
         else:
-            block_lines = self._handle_single_tag(tag, url_hash, tag_uid, table)
+            block_lines = self._handle_single_tag(tag, url_hash, _md5(uid + name), table)
 
-        tag_name = tag.name if isinstance(tag, Element) else None
         for line in block_lines:
             if not line.extras.get("html_tag"):
-                line.extras["html_tag"] = tag_name
+                line.extras["html_tag"] = name
         return block_lines
 
     def _handle_single_tag(
@@ -385,15 +389,6 @@ class HtmlExtractor:
         tag.replace_brs_with_newlines()
         text = tag.get_text() + "\n" if tag.name == "p" and not table else tag.get_text()
         return "" if text is None else text
-
-    def _is_content_tag(self, tag: Node, handle_invisible_table: bool = False) -> bool:
-        if isinstance(tag, Element):
-            if tag.name in SERVICE_TAGS:
-                return False
-            if tag.name == "table" and not self._visible_table(tag, handle_invisible_table):
-                return True
-            return True
-        return not isinstance(tag, (Doctype, Comment))
 
     # -- tables (html_reader.py:225-314) -------------------------------------
 

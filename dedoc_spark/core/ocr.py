@@ -214,6 +214,9 @@ def _runs(profile: np.ndarray, min_gap: int = 1) -> List[Tuple[int, int]]:
 
 _cell_bounds_cache: dict = {}
 _cell_outer_cache: dict = {}
+# (h, w) crop shapes are unbounded over a long-lived worker; the cache
+# starts over when full (entries are pure functions of the key)
+_CELL_OUTER_CACHE_MAX = 2048
 
 
 def _cell_bounds(n: int):
@@ -246,6 +249,8 @@ def _cell_means(crop: np.ndarray) -> np.ndarray:
     summed = np.add.reduceat(np.add.reduceat(crop.astype(np.float64), rb, axis=0), cb, axis=1)
     counts = _cell_outer_cache.get((h, w))
     if counts is None:
+        if len(_cell_outer_cache) >= _CELL_OUTER_CACHE_MAX:
+            _cell_outer_cache.clear()
         counts = _cell_outer_cache[(h, w)] = np.outer(rcounts, ccounts)
     return summed / counts
 

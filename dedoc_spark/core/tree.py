@@ -92,12 +92,12 @@ def construct_tree(lines: List[Line]) -> TreeNode:
     root = _create_root(document_name)
     tree = root
     for line in rest:
-        hl_equal = line.hl == tree.hl
-        type_equal = line.hl.line_type == tree.hl.line_type
-        if line.hl.can_be_multiline and hl_equal and type_equal:
+        hl = line.hl
+        key = hl._key()
+        if hl.can_be_multiline and key == tree.hl._key() and hl.line_type == tree.hl.line_type:
             tree.add_text(line)
         else:
-            while tree.hl >= line.hl:
+            while tree.hl._key() >= key:
                 tree = tree.parent
             tree = tree.add_child(line)
     root = tree

@@ -4,8 +4,10 @@ Minimal RAR containers with STORED (method 0x30 / 0) members in the
 published RAR4/RAR5 block layouts — the shapes core/rar_extract.py walks
 natively (reference archive_reader.py:18-55 shells out to rarfile+unrar;
 only the proprietary DECOMPRESSION stays a typed error here, the
-container walk and stored members are native).  Pure byte assembly —
-no clock, no randomness: same members → identical archive bytes.
+container walk and stored members are native).  A non-zero ``method``
+labels the members compressed instead (their bytes stay as given), which
+reaches that typed error.  Pure byte assembly — no clock, no
+randomness: same members → identical archive bytes.
 """
 
 from __future__ import annotations
@@ -14,8 +16,9 @@ import struct
 from typing import List, Tuple
 
 
-def build_rar4_stored(members: List[Tuple[str, bytes]]) -> bytes:
-    """Minimal RAR4 archive: signature, MAIN_HEAD, stored file blocks."""
+def build_rar4_stored(members: List[Tuple[str, bytes]], method: int = 0) -> bytes:
+    """Minimal RAR4 archive: signature, MAIN_HEAD, stored file blocks
+    (``method`` 1-5 marks them compressed instead)."""
     out = bytearray(b"Rar!\x1a\x07\x00")
     out += struct.pack("<HBHH", 0, 0x73, 0, 13) + b"\x00" * 6  # MAIN_HEAD
     for name, data in members:
@@ -33,7 +36,7 @@ def build_rar4_stored(members: List[Tuple[str, bytes]]) -> bytes:
             0,            # file crc (unchecked)
             0,            # ftime
             29,           # unp_ver
-            0x30,         # method: store
+            0x30 + method,  # method: 0x30 = store
             len(nb),
             0x20,         # attrs
         )
@@ -54,9 +57,10 @@ def _vint(v: int) -> bytes:
             return bytes(out)
 
 
-def build_rar5_stored(members: List[Tuple[str, bytes]]) -> bytes:
+def build_rar5_stored(members: List[Tuple[str, bytes]], method: int = 0) -> bytes:
     """Minimal RAR5 archive: signature, main header, stored file blocks,
-    end block (vint-encoded per the published rar5 layout)."""
+    end block (vint-encoded per the published rar5 layout); ``method``
+    1-5 marks the members compressed instead."""
     out = bytearray(b"Rar!\x1a\x07\x01\x00")
 
     def block(content: bytes, data: bytes = b"") -> bytes:
@@ -73,7 +77,7 @@ def build_rar5_stored(members: List[Tuple[str, bytes]]) -> bytes:
             + _vint(0)          # file flags
             + _vint(len(data))  # unpacked size
             + _vint(0)          # attributes
-            + _vint(0)          # compression_info: method 0 = store
+            + _vint(method << 7)  # compression_info: method 0 = store
             + _vint(0)          # host os
             + _vint(len(nb))
             + nb

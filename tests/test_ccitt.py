@@ -361,3 +361,15 @@ def test_ccitt_blackis1_and_decode_inversion():
     assert np.array_equal(
         decode(parms_extra="/BlackIs1 true ", dict_extra="/Decode [1 0] "), img0
     )
+
+
+def test_run_lut_rejects_codes_that_are_not_prefix_free():
+    """The 14-bit run LUT relies on each color's code table being
+    prefix-free; an overlapping code must fail when the LUT is built
+    instead of silently shadowing the earlier code."""
+    from dedoc_spark.core.ccitt import _build_run_lut
+
+    lut = _build_run_lut({(2, 0b10): 5, (3, 0b110): 6})
+    assert lut[0b10 << 12] == (5, 2) and lut[0b110 << 11] == (6, 3)
+    with pytest.raises(AssertionError):
+        _build_run_lut({(2, 0b10): 5, (3, 0b101): 6})

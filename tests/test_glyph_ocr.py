@@ -384,3 +384,17 @@ def test_real_type_ruled_table_cells():
         for row in json.loads(d["tables_json"])[0]["cells"]
     ]
     assert got == cells
+
+
+def test_grid_outer_cache_is_bounded(monkeypatch):
+    """The per-(h, w) count grid cache starts over when full; features
+    read through the full cache equal a fresh computation."""
+    monkeypatch.setattr(glyph_ocr, "_GRID_OUTER_CACHE_MAX", 8)
+    monkeypatch.setattr(glyph_ocr, "_grid_outer_cache", {})
+    rng = np.random.default_rng(0)
+    crops = [rng.random((h, 50 - h)) for h in range(1, 40)]
+    cached = [glyph_ocr.grid_features(c) for c in crops]
+    assert len(glyph_ocr._grid_outer_cache) <= 8
+    for crop, got in zip(crops, cached):
+        glyph_ocr._grid_outer_cache.clear()
+        assert np.array_equal(glyph_ocr.grid_features(crop), got)

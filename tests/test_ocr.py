@@ -415,3 +415,17 @@ def test_spark_identical_to_plain_call():
     a = extract_document("d.png", png, None, params={"pdf_with_text_layer": "false"})
     b = extract_document("d.png", png, None, params={"pdf_with_text_layer": "false"})
     assert a == b
+
+
+def test_cell_outer_cache_is_bounded(monkeypatch):
+    """The per-(h, w) count grid cache starts over when full; block means
+    read through the full cache equal a fresh computation."""
+    monkeypatch.setattr(ocr, "_CELL_OUTER_CACHE_MAX", 8)
+    monkeypatch.setattr(ocr, "_cell_outer_cache", {})
+    rng = np.random.default_rng(0)
+    crops = [rng.random((h, 41 - h)) for h in range(1, 40)]
+    cached = [ocr._cell_means(c) for c in crops]
+    assert len(ocr._cell_outer_cache) <= 8
+    for crop, got in zip(crops, cached):
+        ocr._cell_outer_cache.clear()
+        assert np.array_equal(ocr._cell_means(crop), got)

@@ -9,6 +9,9 @@ import pytest
 
 from dedoc_spark.core.formats import detect_format, list_archive_members
 from dedoc_spark.core.sevenzip import build_7z, list_members
+from test_reference_corpus import REF_DATA
+
+needs_reference = pytest.mark.skipif(not REF_DATA.is_dir(), reason="reference corpus not available")
 
 MEMBERS = [
     ("a.txt", b"hello world"),
@@ -32,6 +35,7 @@ def test_dispatch_and_archive_channel():
     assert list_archive_members(blob) == MEMBERS
 
 
+@needs_reference
 def test_reference_corpus_archives():
     """Every .7z in the reference's test data must list, with directories
     skipped; zipka.7z member bytes must equal the sibling zipka.zip's."""
@@ -50,6 +54,23 @@ def test_reference_corpus_archives():
         name = info.filename
         key = next(k for k in sz if k.endswith(name.rsplit("/", 1)[-1]))
         assert sz[key] == zf.read(info), name
+
+
+@pytest.mark.parametrize("codec", ["copy", "lzma2"])
+def test_member_bytes_match_zip_of_same_content(codec):
+    """The corpus test's cross-check on built archives: members in
+    subfolders list with the same bytes as the zip of the same content."""
+    import io
+
+    members = [("zipka/a.txt", b"alpha\n" * 50), ("zipka/sub/b.bin", bytes(range(256)) * 3)]
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
+        for name, data in members:
+            zf.writestr(name, data)
+    zf = zipfile.ZipFile(buf)
+    assert dict(list_members(build_7z(members, codec))) == {
+        info.filename: zf.read(info) for info in zf.infolist()
+    }
 
 
 def test_corrupt_rejected():
